@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.BenchExtra <repeats> <query> [query ...]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCHX_ACTION (count|noop).
   * Emits one JSON line: {"metric":"bench_extra","action":...,
-  * "samples":{"q":[s1,s2,...]}}.
+  * "samples":{"q":[s1,s2,...]},"failures":{"q":n}}. A repeat that throws
+  * is a failure, never a timing: its sample is null and it counts in n.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -49,14 +50,17 @@ object BenchExtra {
           val df = fn(spark, sfDir)
           if (action == "noop") df.write.format("noop").mode("overwrite").save()
           else { df.count(): Unit }
-        } catch { case t: Throwable => System.err.println(s"[bench-extra] $name failed: $t") }
-        (System.nanoTime() - t0) / 1e9
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch {
+          case t: Throwable => System.err.println(s"[bench-extra] $name failed: $t"); None
+        }
       }
       name -> times
     }
     val js = samples.map { case (n, ts) =>
-      s""""$n":${ts.map(t => f"$t%.3f").mkString("[", ",", "]")}"""
+      s""""$n":${ts.map(_.fold("null")(t => f"$t%.3f")).mkString("[", ",", "]")}"""
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"bench_extra","action":"$action","sf":"$sfDir","samples":$js}""")
+    val fails = samples.map { case (n, ts) => s""""$n":${ts.count(_.isEmpty)}""" }.mkString("{", ",", "}")
+    println(s"""{"metric":"bench_extra","action":"$action","sf":"$sfDir","samples":$js,"failures":$fails}""")
   }
 }

@@ -227,7 +227,8 @@ object MinHashSigsExpr {
     * signature exists (the Column form yields per-slot nulls; a null
     * signature keeps empty-text docs out of every LSH band instead of
     * colliding them all into one Long.MaxValue bucket). Unreachable from
-    * shingleHashes (always ≥1 element) but enforced here, not by a comment.
+    * `shingle_hashes` (NULL, never empty, below k tokens) but enforced
+    * here, not by a comment.
     */
   def sigs(hashes: ArrayData, numHashes: Int): ArrayData = {
     val n = hashes.numElements()
@@ -245,6 +246,105 @@ object MinHashSigsExpr {
       i += 1
     }
     new GenericArrayData(out)
+  }
+}
+
+/** Distinct hashed word-k-gram shingles of a text as a native codegen'd
+  * expression — the per-doc base of the near-dup family. The Column form
+  * (`array_distinct(transform(sequence(0, size(words) - k), i =>
+  * xxhash64(concat_ws(" ", slice(words, i + 1, k)))))` over
+  * `words = filter(split(text, " "), t => t =!= "")`) runs interpreted
+  * higher-order functions whose lambda re-splits and re-filters `words`
+  * for EVERY shingle position — O(words²) per doc. This expression makes
+  * one pass over the UTF-8 bytes and is BIT-IDENTICAL to that form
+  * (pinned by MlSpec): tokens are the maximal runs of non-`' '` bytes,
+  * each k-window is the tokens joined by single spaces hashed with
+  * `xxhash64`'s XXH64 seed 42, distinct in first-occurrence order.
+  * Children: (text STRING, k INT). NULL for NULL text and for texts with
+  * fewer than k tokens.
+  */
+case class ShingleHashesExpr(left: Expression, right: Expression) extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == StringType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"shingle_hashes requires (STRING, INT), got (${left.dataType.catalogString}, " +
+        s"${right.dataType.catalogString})")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "shingle_hashes"
+  // null below k tokens, independent of child nullability
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(text: Any, k: Any): Any =
+    ShingleHashesExpr.hashes(text.asInstanceOf[UTF8String], k.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (t, k) =>
+      s"""
+         |${ev.value} = graft.functions.expressions.ShingleHashesExpr.hashes($t, $k);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ShingleHashesExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+object ShingleHashesExpr {
+  import org.apache.spark.sql.catalyst.expressions.XXH64
+  import org.apache.spark.unsafe.Platform
+
+  /** Shared kernel. The tokens are first copied once into their
+    * single-space form, so every window is one contiguous byte range;
+    * leading and trailing spaces lie outside every window. Bit-identity
+    * with the Column form holds for valid UTF-8 (that form splits the
+    * decoded string).
+    */
+  def hashes(text: UTF8String, k: Int): ArrayData = {
+    require(k >= 1, s"shingle_hashes: k must be >= 1, got $k")
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    val buf = new Array[Byte](n)
+    var starts = new Array[Int](64)
+    var ends = new Array[Int](64)
+    var cnt = 0
+    var p = 0
+    var i = 0
+    while (i < n) {
+      if (Platform.getByte(base, off + i) == ' ') i += 1
+      else {
+        val s = i
+        while (i < n && Platform.getByte(base, off + i) != ' ') i += 1
+        if (cnt == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, cnt * 2)
+          ends = java.util.Arrays.copyOf(ends, cnt * 2)
+        }
+        if (cnt > 0) { buf(p) = ' '.toByte; p += 1 }
+        Platform.copyMemory(base, off + s, buf, Platform.BYTE_ARRAY_OFFSET + p, i - s)
+        starts(cnt) = p; p += i - s; ends(cnt) = p; cnt += 1
+      }
+    }
+    if (cnt < k) return null
+    val m = cnt - k + 1
+    // open-addressing set over the emitted hashes (first occurrence wins);
+    // XXH64 output is already mixed, so its low bits pick the slot
+    val cap = Integer.highestOneBit(m) << 2
+    val slots = new Array[Long](cap)
+    val used = new Array[Boolean](cap)
+    val out = new Array[Long](m)
+    var nOut = 0
+    var w = 0
+    while (w < m) {
+      val h = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET + starts(w), ends(w + k - 1) - starts(w), 42L)
+      var slot = h.toInt & (cap - 1)
+      while (used(slot) && slots(slot) != h) slot = (slot + 1) & (cap - 1)
+      if (!used(slot)) {
+        used(slot) = true; slots(slot) = h
+        out(nOut) = h; nOut += 1
+      }
+      w += 1
+    }
+    new GenericArrayData(if (nOut == m) out else java.util.Arrays.copyOf(out, nOut))
   }
 }
 
@@ -388,6 +488,8 @@ object GraftFunctions {
       exprs => WinnowingFingerprintsExpr(exprs(0), exprs(1), exprs(2)), "built-in")
     r.createOrReplaceTempFunction(
       "minhash_sigs", exprs => MinHashSigsExpr(exprs(0), exprs(1)), "built-in")
+    r.createOrReplaceTempFunction(
+      "shingle_hashes", exprs => ShingleHashesExpr(exprs(0), exprs(1)), "built-in")
     r.createOrReplaceTempFunction(
       "greedy_pack", exprs => GreedyPackExpr(exprs(0), exprs(1)), "built-in")
     r.createOrReplaceTempFunction(

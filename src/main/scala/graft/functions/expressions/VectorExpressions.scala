@@ -150,22 +150,25 @@ object VectorKernels {
   }
 
   /** argmin cell — replicates `array_sort(struct(dist, cell)).getItem(0)
-    * .getField("cell")`: ascending by (dist, cell), so strict `<` keeping
-    * the lowest index on ties is identical.
+    * .getField("cell")`: ascending by (dist, cell), so a strict "less"
+    * keeping the lowest index on ties is identical. Distances compare with
+    * `java.lang.Double.compare` — Spark's order, NaN after every number and
+    * equal to itself (distances are sums of squares, never -0.0, the one
+    * value where the two orders differ).
     */
   def nearestCell(v: ArrayData, cb: Array[Array[Float]]): java.lang.Integer = {
     val ds = dists(v, cb)
     if (ds == null) return null
     var best = 0
     var c = 1
-    while (c < ds.length) { if (ds(c) < ds(best)) best = c; c += 1 }
+    while (c < ds.length) { if (java.lang.Double.compare(ds(c), ds(best)) < 0) best = c; c += 1 }
     best
   }
 
   /** First `take` cells ranked by (dist, cell) asc — replicates
     * `transform(slice(array_sort(struct(dist, cell)), 1, take), _.cell)`.
-    * Insertion sort on the cell indices: comparison by (dist, index) with
-    * the index tiebreak implicit in a stable sort over distinct indices.
+    * Insertion sort on the cell indices: comparison by (dist, index), dist
+    * in the NaN-last order of [[nearestCell]].
     */
   def rankedCells(v: ArrayData, cb: Array[Array[Float]], take: Int): ArrayData = {
     val ds = dists(v, cb)
@@ -176,7 +179,11 @@ object VectorKernels {
       val cur = idx(i)
       val d = ds(cur)
       var j = i - 1
-      while (j >= 0 && (ds(idx(j)) > d || (ds(idx(j)) == d && idx(j) > cur))) {
+      def after(c: Int): Boolean = {
+        val o = java.lang.Double.compare(ds(c), d)
+        o > 0 || (o == 0 && c > cur)
+      }
+      while (j >= 0 && after(idx(j))) {
         idx(j + 1) = idx(j); j -= 1
       }
       idx(j + 1) = cur

@@ -1,6 +1,5 @@
 package graft.ml
 
-import graft.util.Hashing
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,20 +54,11 @@ object TextDedup {
       explode(array_distinct(split(col(textCol), " "))).as("tok"))
       .filter($"tok" =!= "")
 
-  /** Exact n-gram (word) Jaccard near-dup pairs ≥ threshold via an
-    * inverted-index self-join: explode distinct tokens, join on token,
-    * count shared tokens per pair, compute |A∩B| / (|A|+|B|-|A∩B|).
-    * Shuffle keys: token (bounded by vocabulary), then pair id. Hot tokens
-    * are the skew risk at scale — cap them with a document-frequency filter
-    * (maxDf, drops logged), exactly the standard trick.
-    */
-  def jaccardPairs(docs: DataFrame, threshold: Double,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   maxDf: Long = 1000000L): DataFrame =
-    jaccardPairsFromTokens(docTokens(docs, idCol, textCol), threshold, maxDf)
-
   /** Distinct word-k-gram shingles per doc (requires ≥ k words; callers on
-    * shorter docs should fall back to word tokens).
+    * shorter docs should fall back to word tokens). Deliberately kept on
+    * the Column form: it is the independent STRING-form exact reference
+    * (MlSpec's oracles, q_decontaminate) that would catch a bug in the
+    * native `shingle_hashes` kernel the hashed family runs on.
     */
   def shingleTokens(docs: DataFrame, shingleSize: Int,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -117,21 +107,29 @@ object TextDedup {
     */
   def shingleDocBase(docs: DataFrame, shingleSize: Int,
                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    shingleDocProjection(parallelFloor(docs), shingleSize, idCol, textCol)
-      .localCheckpoint(false)
+    materialized(shingleDocProjection(parallelFloor(docs), shingleSize, idCol, textCol))
+
+  /** Lazy checkpoint of a projection, THEN the drop of short docs: a
+    * `toks IS NOT NULL` filter written over the projection itself would be
+    * pushed below it by Catalyst and evaluate the kernel twice per doc.
+    */
+  private def materialized(projection: DataFrame): DataFrame =
+    projection.localCheckpoint(false).where($"toks".isNotNull)
 
   /** The (id, toks) hashed-shingle projection WITHOUT materialization — the
     * building block [[shingleDocBase]] checkpoints, and the form the
     * incremental path uses for its corpus side (where a full-corpus
-    * checkpoint is exactly the thing to avoid).
+    * checkpoint is exactly the thing to avoid). `toks` comes from the
+    * native single-pass `shingle_hashes` kernel and is NULL for docs with
+    * fewer than k words; nothing filters on it here, so the kernel runs
+    * once per doc (banding skips NULL rows, see [[minhashBanded]]).
+    * `extra` columns ride the same scan.
     */
   private def shingleDocProjection(docs: DataFrame, shingleSize: Int,
-                                   idCol: String, textCol: String): DataFrame = {
-    val words = filter(split(col(textCol), " "), t => t =!= "")
-    docs.where(size(words) >= shingleSize)
-      .select(col(idCol).as("id"),
-        array_distinct(transform(sequence(lit(0), size(words) - lit(shingleSize)),
-          i => xxhash64(concat_ws(" ", slice(words, i + 1, lit(shingleSize)))))).as("toks"))
+                                   idCol: String, textCol: String, extra: Column*): DataFrame = {
+    graft.functions.expressions.GraftFunctions.register(docs.sparkSession)
+    docs.select(col(idCol).as("id") +:
+      call_function("shingle_hashes", col(textCol), lit(shingleSize)).as("toks") +: extra: _*)
   }
 
   /** Exact Jaccard verification of candidate pairs against the shared base:
@@ -210,53 +208,11 @@ object TextDedup {
       .select($"a", $"b", $"shared", $"na", $"nb")
   }
 
-  /** Exact Jaccard verification of candidate pairs: join each (a,b) pair
-    * back to the token table on both sides, count shared tokens, filter by
-    * the exact threshold. Cost is proportional to the CANDIDATE set (already
-    * pruned by LSH), never all-pairs — the standard verify stage after any
-    * sketch-based candidate generator.
-    */
-  def verifyJaccard(pairs: DataFrame, toks: DataFrame, threshold: Double): DataFrame = {
-    val t = hashedToks(toks)
-    val sizes = t.groupBy($"id").agg(count(lit(1)).as("n"))
-    val ta = t.select($"id".as("a"), $"tok")
-    val tb = t.select($"id".as("b"), $"tok")
-    val shared = pairs.select($"a", $"b")
-      .join(ta, Seq("a")).join(tb, Seq("b", "tok"))
-      .groupBy($"a", $"b").agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.withColumnRenamed("id", "a").withColumnRenamed("n", "na"), "a")
-      .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("n", "nb"), "b")
-      .withColumn("jaccard", $"shared" / ($"na" + $"nb" - $"shared"))
-      .filter($"jaccard" >= threshold)
-      .select($"a", $"b", $"shared", $"na", $"nb")
-  }
-
-  /** MinHash signature column: `numHashes` permutations approximated by
-    * seeded hashing over word shingles (min over shingle hashes per seed) —
-    * all inside codegen'd higher-order functions, no UDF.
-    */
-  def minhashSignature(textCol: Column, shingleSize: Int, numHashes: Int): Column =
-    minhashFromHashes(shingleHashes(textCol, shingleSize), numHashes)
-
-  /** Base shingle hashes, computed ONCE per doc (strings are hashed a single
-    * time; the N permutations below are arithmetic over these longs — the
-    * standard one-hash + N-mix MinHash construction. Without this split the
-    * string shingle array is re-built per permutation: measured 30×+ slower).
-    */
-  def shingleHashes(textCol: Column, shingleSize: Int): Column = {
-    val words = split(textCol, " ")
-    val n = size(words)
-    val shingles = when(n >= shingleSize,
-      transform(sequence(lit(0), n - lit(shingleSize)),
-        i => concat_ws(" ", slice(words, i + 1, lit(shingleSize)))))
-      .otherwise(array(concat_ws(" ", words)))
-    transform(shingles, s => xxhash64(s))
-  }
-
   /** i-th permutation = min over xxhash64(h, i) — re-hashing the base longs
     * is codegen'd, seed-indexed, and immune to ANSI-mode overflow (a
-    * multiplicative family would throw under spark.sql.ansi.enabled).
+    * multiplicative family would throw under spark.sql.ansi.enabled). The
+    * Column-form definition the native `minhash_sigs` kernel is pinned
+    * bit-identical to (MlSpec).
     */
   def minhashFromHashes(hashes: Column, numHashes: Int): Column =
     array((0 until numHashes).map { i =>
@@ -314,9 +270,10 @@ object TextDedup {
     val r = numHashes / bands
     graft.functions.expressions.GraftFunctions.register(base.sparkSession)
     base.select($"id", expr(s"minhash_sigs(toks, $numHashes)").as("sig"))
-      .select($"id", explode(
+      // NULL toks (< k words) ⇒ NULL sig ⇒ explode(NULL): no band rows
+      .select($"id", explode(when($"sig".isNotNull,
         transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), slice($"sig", b * r + 1, lit(r)).as("bsig")))).as("bk"))
+          b => struct(b.as("band"), slice($"sig", b * r + 1, lit(r)).as("bsig"))))).as("bk"))
       .select($"id", $"bk.band".as("band"), $"bk.bsig".as("bsig"))
   }
 
@@ -724,12 +681,8 @@ object TextDedup {
                       idCol: String = "doc_id", textCol: String = "text",
                       maxHamming: Int = 8, shingleSize: Int = 3,
                       maxBucket: Int = 1000): DataFrame = {
-    val words = filter(split(col(textCol), " "), t => t =!= "")
-    val base = parallelFloor(docs).where(size(words) >= shingleSize)
-      .select(col(idCol).as("id"), simhash64Col(docs, textCol).as("sh"),
-        array_distinct(transform(sequence(lit(0), size(words) - lit(shingleSize)),
-          i => xxhash64(concat_ws(" ", slice(words, i + 1, lit(shingleSize)))))).as("toks"))
-      .localCheckpoint(false)
+    val base = materialized(shingleDocProjection(parallelFloor(docs), shingleSize,
+      idCol, textCol, simhash64Col(docs, textCol).as("sh")))
     // the two channels run SEQUENTIALLY on purpose: a concurrent-futures
     // variant (eager base + FAIR pools, the commit-window pattern) was
     // tried and reverted — each channel's banding/occupancy jobs already

@@ -91,24 +91,34 @@ class ExpressionsSpec extends AnyFunSuite {
     df.select(call_function("rh_bucket_long", col("v"), lit(64), lit(8), lit(0x97a3e5L)).as("n"),
       legacyRb.as("l"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1), "rh_bucket_long drift"))
-    // nearest_cell / ranked_cells == the array_sort(struct(dist, cell)) form
+    // nearest_cell / ranked_cells == the array_sort(struct(dist, cell)) form,
+    // including Spark's NaN-last order: a NaN element makes every distance
+    // NaN; an +Inf element against the +Inf centroid of the second codebook
+    // makes cell 0 NaN and the rest +Inf
     val cb = vecs.take(4).map(_._2).toArray
-    val b64 = graft.functions.expressions.VectorKernels.encodeMatrix(cb)
-    val legacyRanked = array_sort(array(cb.toIndexedSeq.zipWithIndex.map { case (cen, i) =>
-      struct(aggregate(zip_with(col("v"),
-        array(cen.toIndexedSeq.map(x => lit(x.toDouble)): _*),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-        lit(0.0d), (acc, x) => acc + x).as("dist"), lit(i).as("cell"))
-    }: _*))
-    df.select(
-      call_function("nearest_cell", col("v"), lit(b64)).as("nc"),
-      call_function("ranked_cells", col("v"), lit(b64), lit(4)).as("ncells"),
-      legacyRanked.getItem(0).getField("cell").as("lc"),
-      transform(legacyRanked, s => s.getField("cell")).as("lcells"))
-      .collect().foreach { r =>
-        assert(r.getInt(0) == r.getInt(2), "nearest_cell drift")
-        assert(r.getSeq[Int](1) == r.getSeq[Int](3), "ranked_cells drift")
-      }
+    val infCb = cb.updated(0, cb(0).updated(5, Float.PositiveInfinity))
+    val withNaN = df.unionByName(Seq(
+      (100L, vecs(7)._2.updated(3, Float.NaN)),
+      (101L, vecs(8)._2.updated(5, Float.PositiveInfinity))).toDF("id", "v"))
+    Seq(cb, infCb).foreach { book =>
+      val b64 = graft.functions.expressions.VectorKernels.encodeMatrix(book)
+      val legacyRanked = array_sort(array(book.toIndexedSeq.zipWithIndex.map { case (cen, i) =>
+        struct(aggregate(zip_with(col("v"),
+          array(cen.toIndexedSeq.map(x => lit(x.toDouble)): _*),
+          (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
+          lit(0.0d), (acc, x) => acc + x).as("dist"), lit(i).as("cell"))
+      }: _*))
+      withNaN.select(
+        col("id"),
+        call_function("nearest_cell", col("v"), lit(b64)).as("nc"),
+        call_function("ranked_cells", col("v"), lit(b64), lit(4)).as("ncells"),
+        legacyRanked.getItem(0).getField("cell").as("lc"),
+        transform(legacyRanked, s => s.getField("cell")).as("lcells"))
+        .collect().foreach { r =>
+          assert(r.getInt(1) == r.getInt(3), s"nearest_cell drift on vector ${r.getLong(0)}")
+          assert(r.getSeq[Int](2) == r.getSeq[Int](4), s"ranked_cells drift on vector ${r.getLong(0)}")
+        }
+    }
     // NULL vector: bucket forms yield 0 (the Column form's otherwise(0)
     // fallthrough), never NULL and never an NPE
     val withNull = Seq((1L, null.asInstanceOf[Array[Float]])).toDF("id", "v")

@@ -147,6 +147,41 @@ class MlSpec extends AnyFunSuite {
     both.foreach { case (id, a, b) => assert(a == b, s"signature mismatch for doc $id") }
   }
 
+  test("shingle_hashes native expression is bit-identical to the Column form; runs once per doc") {
+    graft.functions.expressions.GraftFunctions.register(spark)
+    val edge = Seq[(Long, String)](
+      (9001L, null), (9002L, ""), (9003L, "two words"), (9004L, "   "),
+      (9005L, "  lead and trail spaces  "), (9006L, "repeated   gaps  between  words"),
+      (9007L, "tab\tinside a token here"), (9008L, "héllo wörld 日本 語 テキスト ünï"),
+      (9009L, "a b c a b c a b c x"), (9010L, "one two three"))
+      .toDF("doc_id", "text")
+    val docs = planted.unionByName(edge)
+    def compare(input: org.apache.spark.sql.DataFrame) = {
+      val rows = input.select($"doc_id",
+        expr("shingle_hashes(text, 3)").as("native"),
+        graft.TestUdfs.shingleHashes($"text", 3).as("col_form"))
+        .as[(Long, Option[Seq[Long]], Option[Seq[Long]])].collect()
+      assert(rows.length == 66 + 10)
+      rows.foreach { case (id, n, c) => assert(n == c, s"shingle hash mismatch for doc $id") }
+      rows
+    }
+    // local rows fold at optimization time (interpreted eval); the
+    // repartitioned input runs the generated code
+    compare(docs)
+    val rows = compare(docs.repartition(4))
+    val byId = rows.map(r => r._1 -> r._2).toMap
+    Seq(9001L, 9002L, 9003L, 9004L).foreach(id => assert(byId(id).isEmpty, s"doc $id must be NULL"))
+    // "a b c" recurs: 8 windows, 3 distinct k-grams + "b c x", in first-occurrence order
+    assert(byId(9009L).get.length == 4)
+    assert(byId(9010L).get.length == 1)
+    // the kernel appears ONCE in the banding plan: no pushed-down null filter
+    // re-evaluates it (a checkpointed input, so no filter can fold into
+    // local rows at optimization time)
+    val plan = TextDedup.bandIndexOf(docs.where($"text".isNotNull).localCheckpoint())
+      .queryExecution.executedPlan.toString
+    assert("shingle_hashes\\(".r.findAllMatchIn(plan).length == 1, plan)
+  }
+
   test("minhash_sigs yields NULL on an empty shingle array (no one-bucket collision for empty docs)") {
     graft.functions.expressions.GraftFunctions.register(spark)
     val row = spark.sql(
