@@ -220,12 +220,11 @@ object TextDedup {
     }: _*)
 
   /** MinHash + LSH banding: signature → `bands` band keys → per-(band,
-    * band-signature) buckets → candidate pairs by SELF-JOIN on the bucket
-    * key (streamed pair expansion; see [[jaccardPairsFromTokens]]).
-    * Probability a pair with Jaccard j collides: 1-(1-j^r)^b, r=rows/band.
-    * Default 16 bands × 2 rows: a j=0.8 pair is missed with probability
-    * (1-0.8²)^16 ≈ 8·10⁻⁸ — effectively exhaustive at the 0.8 threshold.
-    * Degenerate buckets above maxBucket are shed and logged.
+    * band-signature) buckets → candidate pairs by the [[bucketSelfJoin]]
+    * (whose doc states the threshold domain where the banding is
+    * effectively exhaustive). Probability a pair with Jaccard j collides:
+    * 1-(1-j^r)^b, r=rows/band. Degenerate buckets above maxBucket are shed
+    * and logged.
     */
   def minhashLshCandidates(docs: DataFrame, idCol: String = "doc_id",
                            textCol: String = "text", shingleSize: Int = 3,
@@ -236,27 +235,50 @@ object TextDedup {
 
   /** LSH banding over the shared base: signatures are pure long arithmetic
     * (xxhash64 re-mix + array_min) over the materialized `toks`, so the
-    * candidate stage re-reads 8-byte hashes, never the corpus text. The
-    * per-(band, bsig) occupancy table is eagerly checkpointed: the skew-cap
-    * drop count AND the bucket filter both read it, so drop-logging costs a
-    * count over a small cached table instead of re-running the banding agg.
+    * candidate stage re-reads 8-byte hashes, never the corpus text.
     */
-  def minhashLshCandidatesFromBase(base: DataFrame, numHashes: Int = 32, bands: Int = 16,
-                                   maxBucket: Int = 1000, logDrops: Boolean = true): DataFrame = {
-    val banded = minhashBanded(base, numHashes, bands)
-    val counts = banded.groupBy($"band", $"bsig").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // one row per occupied bucket — small
-    if (logDrops) {
-      val big = counts.filter($"cnt" > maxBucket).count()
-      logDrop("minhash-lsh", s"buckets larger than $maxBucket", big)
-    }
+  private def minhashLshCandidatesFromBase(base: DataFrame, numHashes: Int = 32, bands: Int = 16,
+                                           maxBucket: Int = 1000,
+                                           logDrops: Boolean = true): DataFrame =
+    bucketSelfJoin(minhashBanded(base, numHashes, bands), Seq("band", "bsig"), maxBucket,
+      Option.when(logDrops)("minhash-lsh"))
+
+  /** The ONE bucket self-join of the banding family — batch MinHash,
+    * incremental/indexed MinHash and SimHash all end here. Bucket occupancy
+    * over `banded` rows keyed by `keys` is eagerly checkpointed (one row per
+    * occupied bucket — small): the skew-cap drop count (logged under
+    * `dropLabel`) and the bucket filter both read it, so the audit costs a
+    * count over a small cached table, not a second banding agg. Rows in
+    * buckets of 2..maxBucket members then self-join on the bucket key with
+    * `x.id < y.id` AND the caller's `pairCond` — pair expansion streams
+    * across join output rows (see [[jaccardPairsFromTokens]]). Output:
+    * distinct (a, b, extra…).
+    *
+    * ==Where exhaustiveness holds==
+    * The MinHash callers band 32 hashes as 16 bands × 2 rows, which misses
+    * a pair at Jaccard J with probability (1−J²)¹⁶: ≈ 8·10⁻⁸ at J = 0.8,
+    * ≈ 3·10⁻¹² at J = 0.9, but ≈ 1% at J = 0.5. "The verified output equals
+    * the exhaustive exact-Jaccard pair set" therefore holds only for
+    * thresholds near the 0.8/0.9 defaults; the exact verify removes false
+    * candidates but cannot restore a missed one, so recall falls with the
+    * threshold. The SimHash radius banding is lossless AT its radius
+    * (pigeonhole), but no radius covers a Jaccard threshold (see
+    * [[simhashNearDups]]).
+    */
+  private def bucketSelfJoin(banded: DataFrame, keys: Seq[String], maxBucket: Int,
+                             dropLabel: Option[String], pairCond: Column = lit(true),
+                             extra: Seq[Column] = Nil): DataFrame = {
+    val counts = banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
+      .localCheckpoint(true)
+    dropLabel.foreach(op =>
+      logDrop(op, s"buckets larger than $maxBucket", counts.filter($"cnt" > maxBucket).count()))
     val inBucket = banded.join(
-      counts.filter($"cnt" > 1 && $"cnt" <= maxBucket).select($"band", $"bsig"),
-      Seq("band", "bsig"), "left_semi")
+      counts.filter($"cnt" > 1 && $"cnt" <= maxBucket).select(keys.map(col): _*),
+      keys, "left_semi")
     inBucket.as("x").join(inBucket.as("y"),
-      col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
-        col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
+      keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+        col("x.id") < col("y.id") && pairCond)
+      .select(col("x.id").as("a") +: col("y.id").as("b") +: extra: _*).distinct()
   }
 
   /** (id, band, bsig) banding rows over an (id, toks) base — the shared
@@ -278,11 +300,12 @@ object TextDedup {
   }
 
   /** MinHash near-dups, exact-verified: LSH candidates filtered by the TRUE
-    * shingle-Jaccard threshold. With the 16×2 banding the candidate recall
-    * at j ≥ 0.8 is 1-8·10⁻⁸, so the verified output equals the exhaustive
-    * exact-Jaccard pair set (what the DuckDB oracle computes) — the sketch
-    * only prunes the pair space, it never decides membership. Candidate
-    * generation and verification share ONE materialized shingle base.
+    * shingle-Jaccard threshold — the sketch only prunes the pair space, it
+    * never decides membership; at thresholds near the 0.8 default the
+    * verified output equals the exhaustive exact-Jaccard pair set (what the
+    * DuckDB oracle computes; the threshold domain is on [[bucketSelfJoin]]).
+    * Candidate generation and verification share ONE materialized shingle
+    * base.
     */
   def minhashNearDups(docs: DataFrame, threshold: Double,
                       idCol: String = "doc_id", textCol: String = "text",
@@ -301,6 +324,9 @@ object TextDedup {
     * `minhashNearDups(corpus ∪ delta)` restricted to pairs touching the
     * delta (pinned by spec); ids must be disjoint across the two inputs.
     *
+    * This is [[minhashNearDupsIndexed]]'s core with the band index built on
+    * the fly ([[bandIndexOf]] of the live corpus, key collection off) — the
+    * one-shot / no-index path and the equality oracle for the indexed one.
     * Corpus-side cost is TWO pushdown-friendly scans and zero corpus-sized
     * materializations or self-joins:
     *   1. banding — each corpus row's band keys are semi-joined against the
@@ -313,13 +339,6 @@ object TextDedup {
     *      join below this projection on its own — verified on the plan),
     *      so the corpus shingle pipeline runs a second time only for docs
     *      that appear in some candidate pair.
-    * [[minhashNearDupsIndexed]] is the deployed form of scan 1: the banding
-    * rows PERSISTED as a `bkey`-bucketed snapshot table (the same
-    * storage-partitioned design as the crawl engine's seen table), read
-    * bucket-pruned instead of recomputed — [[graft.streaming.DedupStream]]
-    * maintains that index commit-by-commit. This recomputing form remains
-    * the one-shot / no-index path and the equality oracle for the indexed
-    * one.
     *
     * Bucket-cap semantics match the batch operator on every bucket the
     * delta occupies (occupancy there counts corpus + delta rows, exactly
@@ -330,21 +349,10 @@ object TextDedup {
   def minhashNearDupsIncremental(corpus: DataFrame, delta: DataFrame, threshold: Double,
                                  idCol: String = "doc_id", textCol: String = "text",
                                  shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
-                                 maxBucket: Int = 1000, logDrops: Boolean = true): DataFrame = {
-    val baseD = shingleDocBase(delta, shingleSize, idCol, textCol)
-    // eager for the same reason as the indexed form: every downstream eager
-    // point holds this plan as a subtree
-    val bandedD = minhashBanded(baseD, numHashes, bands).localCheckpoint(true)
-    val deltaKeys = bandedD.select($"band", $"bsig").distinct()
-    val corpusToks = shingleDocProjection(parallelFloor(corpus), shingleSize, idCol, textCol)
-    // delta-sized after the semi-join: only corpus rows in delta-occupied
-    // buckets can pair with a delta doc
-    val bandedC = minhashBanded(corpusToks, numHashes, bands)
-      .join(deltaKeys, Seq("band", "bsig"), "left_semi")
-      .localCheckpoint(false)
-    incrementalTail(corpus, baseD, bandedD, bandedC, threshold, idCol, textCol,
-      shingleSize, maxBucket, logDrops, "minhash-incremental")
-  }
+                                 maxBucket: Int = 1000, logDrops: Boolean = true): DataFrame =
+    indexedCore(corpus, delta, threshold, idCol, textCol, shingleSize, numHashes, bands,
+      maxBucket, Option.when(logDrops)("minhash-incremental"), pruneMaxKeys = 0,
+      _ => bandIndexOf(corpus, shingleSize, numHashes, bands, idCol, textCol))._1
 
   /** The (id, band, bsig, bkey) band-index rows of a document table — what a
     * deployment PERSISTS (bucketed by `bkey`) so per-ingest dedup never
@@ -365,134 +373,75 @@ object TextDedup {
   private def withBkey(banded: DataFrame): DataFrame =
     banded.withColumn("bkey", xxhash64($"band", $"bsig"))
 
-  /** [[minhashNearDupsIncremental]] against a PERSISTED band index instead
-    * of a live corpus banding scan: `bandIndex` carries the corpus's
-    * [[bandIndexOf]] rows (typically the union of a bucketed snapshot
-    * table's commit chunks), so candidate generation reads (id, band, bsig,
-    * bkey) rows — never corpus text — and when the delta occupies at most
-    * `inListCap` distinct buckets the read is narrowed further to
-    * `bkey IN (delta's keys)`: an 8-byte-key filter that pushes down to the
-    * index scans (parquet row-group stats + bucket pruning on a
-    * bucket-stored index — PlanSpec asserts `SelectedBucketsCount`). The
-    * cap exists because Catalyst's plan walk and parquet's stat check are
-    * linear in the literal count — a multi-thousand-key list costs more
-    * than it saves (measured ~5 s/batch at 4-8k literals); larger deltas
-    * rely on the (band, bsig) semi-join, or on the TABLE form below, whose
-    * file-level bucket skip has no plan-side cost at any key count. bkey
-    * collisions only ADD candidate rows; the exact (band, bsig) semi-join
-    * below removes them, so pruning never changes the output (MlSpec pins
-    * pruned == unpruned == recomputed). The verify stage still re-reads
-    * only candidate-pair ids from the raw corpus, as in the recomputing
-    * form. `pruneMaxKeys <= 0` disables key collection entirely.
+  /** [[minhashNearDupsIncremental]] against a PERSISTED band index: the
+    * corpus's [[bandIndexOf]] rows stored as a `bkey`-bucketed snapshot
+    * table (the same storage-partitioned design as the crawl engine's seen
+    * table), so candidate generation reads (id, band, bsig, bkey) rows —
+    * never corpus text — and [[graft.streaming.DedupStream]] maintains the
+    * table commit-by-commit. The verify stage still re-reads only
+    * candidate-pair ids from the raw corpus.
+    *
+    * When the delta occupies at most `pruneMaxKeys` distinct bkeys the read
+    * is FILE-skipped: the keys map driver-side to the storage-bucket ids
+    * the index writer stamped into its file names
+    * ([[graft.snapshot.SnapshotStore.bucketIdOfLong]] — the same
+    * pmod(murmur3) `repartition(n, col)` used) and only matching files are
+    * listed into the scan — O(occupied / total buckets) of the index with
+    * no plan-side cost. A literal `bkey IN` row-group filter is added only
+    * under `inListCap` keys: Catalyst's analysis/folding walk and parquet's
+    * stat evaluation are LINEAR in the literal count, and a measured
+    * 4-8k-literal list cost ~5 s/micro-batch at sf0.1 — more than the
+    * whole unpruned index read it was saving. `pruneMaxKeys <= 0` disables
+    * key collection (full index read). bkey collisions only ADD candidate
+    * rows and the exact (band, bsig) semi-join removes them, so neither
+    * pruning layer changes the output (MlSpec pins every layer == the
+    * recomputing form).
+    *
+    * Returns (pairs, the delta's own band-index rows `(id, band, bsig,
+    * bkey)`) — equal to [[bandIndexOf]](delta) by construction and already
+    * EAGERLY materialized for candidate generation, so an ingest loop that
+    * also appends the delta to the index reuses them instead of running the
+    * shingle + minhash pipeline over the delta twice (MlSpec pins the
+    * row-set equality).
     */
-  def minhashNearDupsIndexed(corpus: DataFrame, bandIndex: DataFrame, delta: DataFrame,
-                             threshold: Double,
+  def minhashNearDupsIndexed(corpus: DataFrame, indexTable: graft.snapshot.SnapshotTable,
+                             delta: DataFrame, threshold: Double,
                              idCol: String = "doc_id", textCol: String = "text",
                              shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
                              maxBucket: Int = 1000, logDrops: Boolean = true,
                              pruneMaxKeys: Int = 1 << 15,
-                             inListCap: Int = defaultInListCap): DataFrame =
-    // keys above inListCap are useless to the DataFrame form (only the
-    // table form file-skips with them) — cap the collection so the driver
-    // never pays two jobs to gather tens of thousands of keys it discards
-    indexedCore(corpus, delta, threshold, idCol, textCol, shingleSize, numHashes,
-      bands, maxBucket, logDrops, math.min(pruneMaxKeys, inListCap),
-      keys => inFiltered(bandIndex, keys, inListCap))._1
-
-  /** [[minhashNearDupsIndexed]] reading the index straight from its
-    * SNAPSHOT TABLE, which unlocks the pruning that matters at scale:
-    * FILE-level bucket skip. The delta's collected `bkey`s map driver-side
-    * to the storage-bucket ids the index writer stamped into its file names
-    * ([[graft.snapshot.SnapshotStore.bucketIdOfLong]] — the same
-    * pmod(murmur3) `repartition(n, col)` used), and only matching files are
-    * listed into the scan — the read is O(occupied buckets / total buckets)
-    * of the index with no plan-side cost at all. The literal `bkey IN`
-    * row-group filter is still applied, but only when the key list is small
-    * (`inListCap`): Catalyst's analysis/folding walk and parquet's stat
-    * evaluation are LINEAR in the literal count, and a measured 4-8k-literal
-    * list cost ~5 s/micro-batch at sf0.1 — more than the whole unpruned
-    * index read it was saving. bkey collisions only ADD candidate rows and
-    * the exact (band, bsig) semi-join removes them, so neither pruning layer
-    * changes the output (MlSpec pins table == DataFrame == recomputed).
-    */
-  def minhashNearDupsIndexed(corpus: DataFrame, indexTable: graft.snapshot.SnapshotTable,
-                             delta: DataFrame, threshold: Double,
-                             idCol: String, textCol: String,
-                             shingleSize: Int, numHashes: Int, bands: Int,
-                             maxBucket: Int, logDrops: Boolean,
-                             pruneMaxKeys: Int, inListCap: Int): DataFrame =
-    minhashNearDupsIndexedWithBandRows(corpus, indexTable, delta, threshold,
-      idCol, textCol, shingleSize, numHashes, bands, maxBucket, logDrops,
-      pruneMaxKeys, inListCap)._1
-
-  /** [[minhashNearDupsIndexed]] (table form) that ALSO returns the delta's
-    * own band-index rows `(id, band, bsig, bkey)` — equal to
-    * [[bandIndexOf]](delta) by construction (same projection, banding and
-    * bkey derivation) and already EAGERLY materialized for candidate
-    * generation. An ingest loop that must also append the delta to the
-    * persisted index (the [[graft.streaming.DedupStream]] shape) reuses
-    * these rows instead of re-running the shingle explode + minhash
-    * pipeline over the delta a second time per batch. MlSpec pins the
-    * row-set equality with `bandIndexOf`.
-    */
-  def minhashNearDupsIndexedWithBandRows(
-      corpus: DataFrame, indexTable: graft.snapshot.SnapshotTable,
-      delta: DataFrame, threshold: Double,
-      idCol: String = "doc_id", textCol: String = "text",
-      shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
-      maxBucket: Int = 1000, logDrops: Boolean = true,
-      pruneMaxKeys: Int = 1 << 15,
-      inListCap: Int = defaultInListCap): (DataFrame, DataFrame) = {
+                             inListCap: Int = 1024): (DataFrame, DataFrame) = {
     val spark = delta.sparkSession
-    import spark.implicits._
-    def fullIndex: DataFrame = indexTable.readCommitChunks(spark)
-      .map(_.reduce(_ unionByName _))
-      .getOrElse(emptyIndex(spark))
-    indexedCore(corpus, delta, threshold, idCol, textCol, shingleSize, numHashes,
-      bands, maxBucket, logDrops, pruneMaxKeys, {
+    def orEmpty(index: Option[DataFrame]): DataFrame = index.getOrElse {
+      import spark.implicits._
+      Seq.empty[(Long, Int, Array[Long], Long)].toDF("id", "band", "bsig", "bkey")
+    }
+    indexedCore(corpus, delta, threshold, idCol, textCol, shingleSize, numHashes, bands,
+      maxBucket, Option.when(logDrops)("minhash-indexed"), pruneMaxKeys, {
         case Some(ks) =>
           val occupied = scala.collection.mutable.HashMap.empty[Int, Set[Int]]
           def keep(n: Int, b: Int): Boolean = occupied.getOrElseUpdate(n,
             ks.iterator.map(graft.snapshot.SnapshotStore.bucketIdOfLong(_, n)).toSet)(b)
           // "bkey" names the column our keys hash — dirs bucketed on any
           // other column are read in full rather than mispruned
-          indexTable.readBucketSkipped(spark, "bkey", keep)
-            .map(df => inFiltered(df, Some(ks), inListCap))
-            .getOrElse(emptyIndex(spark))
-        case None => fullIndex
+          orEmpty(indexTable.readBucketSkipped(spark, "bkey", keep).map(df =>
+            if (ks.length <= inListCap) df.where($"bkey".isInCollection(ks.toSeq)) else df))
+        case None => orEmpty(indexTable.readCommitChunks(spark).map(_.reduce(_ unionByName _)))
       })
   }
 
-  /** [[minhashNearDupsIndexed]] (table form) with the usual defaults. */
-  def minhashNearDupsIndexed(corpus: DataFrame, indexTable: graft.snapshot.SnapshotTable,
-                             delta: DataFrame, threshold: Double): DataFrame =
-    minhashNearDupsIndexed(corpus, indexTable, delta, threshold, "doc_id", "text",
-      3, 32, 16, 1000, true, 1 << 15, defaultInListCap)
-
-  /** Literal-`IN` cap: lists beyond this ride the semi-join alone. */
-  private val defaultInListCap: Int = 1024
-
-  private def emptyIndex(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Int, Array[Long], Long)].toDF("id", "band", "bsig", "bkey")
-  }
-
-  private def inFiltered(index: DataFrame, keys: Option[Array[Long]], inListCap: Int): DataFrame =
-    keys.filter(_.length <= inListCap) match {
-      case Some(ks) => index.where($"bkey".isInCollection(ks.toSeq))
-      case None => index
-    }
-
-  /** Shared body of the indexed forms: delta banding + key collection once,
-    * index supplied by `indexFor` (given the collected keys when there are
-    * at most `pruneMaxKeys`, None otherwise). Returns (pairs, the delta's
-    * materialized band rows) — the second element is what
-    * [[minhashNearDupsIndexedWithBandRows]] hands to ingest loops.
+  /** The shared core of the incremental and indexed forms: delta banding
+    * and key collection once, the corpus band index supplied by `indexFor`
+    * (given the collected bkeys when there are at most `pruneMaxKeys`, None
+    * otherwise), the [[bucketSelfJoin]] over corpus ∪ delta band rows
+    * restricted to delta-touching pairs, and the candidate-ids-only exact
+    * verify against the raw corpus. Returns (pairs, the delta's
+    * materialized band rows).
     */
   private def indexedCore(corpus: DataFrame, delta: DataFrame, threshold: Double,
                           idCol: String, textCol: String, shingleSize: Int,
                           numHashes: Int, bands: Int, maxBucket: Int,
-                          logDrops: Boolean, pruneMaxKeys: Int,
+                          dropLabel: Option[String], pruneMaxKeys: Int,
                           indexFor: Option[Array[Long]] => DataFrame): (DataFrame, DataFrame) = {
     val baseD = shingleDocBase(delta, shingleSize, idCol, textCol)
     // EAGER: deltaKeys, the bucket-count base and the pair expansion all
@@ -517,36 +466,15 @@ object TextDedup {
           .limit(pruneMaxKeys + 1).collect().map(_.getLong(0))
         if (ks.length > pruneMaxKeys) None else Some(ks)
       }
+    // delta-sized after the semi-join: only corpus rows in delta-occupied
+    // buckets can pair with a delta doc
     val bandedC = indexFor(keys).select($"id", $"band", $"bsig")
       .join(deltaKeys.select($"band", $"bsig"), Seq("band", "bsig"), "left_semi")
       .localCheckpoint(false)
-    (incrementalTail(corpus, baseD, bandedD.drop("bkey"), bandedC, threshold, idCol,
-      textCol, shingleSize, maxBucket, logDrops, "minhash-indexed"), bandedD)
-  }
-
-  /** Shared tail of the two incremental generators: bucket-cap accounting
-    * over corpus∪delta band rows, delta-touching pair expansion, and the
-    * candidate-ids-only exact verify against the raw corpus.
-    */
-  private def incrementalTail(corpus: DataFrame, baseD: DataFrame, bandedD: DataFrame,
-                              bandedC: DataFrame, threshold: Double,
-                              idCol: String, textCol: String, shingleSize: Int,
-                              maxBucket: Int, logDrops: Boolean, label: String): DataFrame = {
     val all = bandedC.withColumn("isd", lit(false))
-      .unionByName(bandedD.withColumn("isd", lit(true)))
-    val counts = all.groupBy($"band", $"bsig").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // one row per delta-occupied bucket — small
-    if (logDrops) {
-      val big = counts.filter($"cnt" > maxBucket).count()
-      logDrop(label, s"buckets larger than $maxBucket", big)
-    }
-    val inBucket = all.join(
-      counts.filter($"cnt" > 1 && $"cnt" <= maxBucket).select($"band", $"bsig"),
-      Seq("band", "bsig"), "left_semi")
-    val cands = inBucket.as("x").join(inBucket.as("y"),
-      col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
-        col("x.id") < col("y.id") && (col("x.isd") || col("y.isd")))
-      .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
+      .unionByName(bandedD.drop("bkey").withColumn("isd", lit(true)))
+    val cands = bucketSelfJoin(all, Seq("band", "bsig"), maxBucket, dropLabel,
+      col("x.isd") || col("y.isd"))
       .localCheckpoint(false) // read twice below: the id set and the verify join
     val candIds = cands.select($"a".as("id"))
       .unionByName(cands.select($"b".as("id"))).distinct()
@@ -562,7 +490,7 @@ object TextDedup {
     val target = corpusHits.sparkSession.sparkContext.defaultParallelism
     val verifyBase = shingleDocProjection(corpusHits.repartition(target), shingleSize, idCol, textCol)
       .unionByName(baseD)
-    verifyJaccardOnBase(cands, verifyBase, threshold)
+    (verifyJaccardOnBase(cands, verifyBase, threshold), bandedD)
   }
 
   /** 64-bit SimHash kernel: weighted sign-sum of token hashes (Charikar,
@@ -618,15 +546,6 @@ object TextDedup {
       // (id, sh, chunk, bits) is chunks×nDocs 32-byte rows; materialize once —
       // the occupancy agg, the bucket semi-join and BOTH self-join sides read it
       .localCheckpoint(false)
-    val counts = banded.groupBy($"chunk", $"bits").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // one row per occupied bucket — small
-    if (logDrops) {
-      val big = counts.filter($"cnt" > maxBucket).count()
-      logDrop("simhash", s"buckets larger than $maxBucket", big)
-    }
-    val inBucket = banded.join(
-      counts.filter($"cnt" > 1 && $"cnt" <= maxBucket).select($"chunk", $"bits"),
-      Seq("chunk", "bits"), "left_semi")
     // the radius cut lives IN the join condition: bucket cohabitation is
     // only a necessary condition (9-10 bits of agreement), and chance
     // cohabitants — n²/2^width of them, the asymptotically dominant term —
@@ -636,20 +555,17 @@ object TextDedup {
     // shuffle (measured at sf0.1: 3.3M bucket-cohabiting pairs vs 796
     // radius-true ones — the unfiltered verify moved ~10 GB to reject
     // 99.98% of its input)
-    inBucket.as("x").join(inBucket.as("y"),
-      col("x.chunk") === col("y.chunk") && col("x.bits") === col("y.bits") &&
-        col("x.id") < col("y.id") &&
-        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))) <= maxHamming)
-      .select(col("x.id").as("a"), col("y.id").as("b"),
-        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
-      .distinct()
+    val hamming = bit_count(col("x.sh").bitwiseXOR(col("y.sh")))
+    bucketSelfJoin(banded, Seq("chunk", "bits"), maxBucket, Option.when(logDrops)("simhash"),
+      hamming <= maxHamming, Seq(hamming.as("hamming")))
   }
 
   /** SimHash near-dups, exact-verified: Hamming-radius candidates (lossless
     * banding, radius enforced in the join) UNIONED with MinHash-LSH
     * candidates over the same base, then filtered by the TRUE shingle-
-    * Jaccard threshold — the output is hash-independent and equals the
-    * exhaustive exact-Jaccard pair set.
+    * Jaccard threshold — the output is hash-independent and, at thresholds
+    * near the 0.9 default, equals the exhaustive exact-Jaccard pair set
+    * (the threshold domain is on [[bucketSelfJoin]]).
     *
     * Why two candidate channels (r6 correctness fix): the radius-covers-
     * the-threshold claim a single simhash channel rests on is false for
@@ -662,9 +578,8 @@ object TextDedup {
     * 11-word doc + its one-token-appended planted dup sits at J = 9/10
     * exactly). No finite radius is sound, so completeness comes from the
     * second channel: [[minhashLshCandidatesFromBase]] over the SAME
-    * materialized base (16 bands × 2 rows — misses a J ≥ 0.9 pair w.p.
-    * (1-0.9²)¹⁶ ≈ 3·10⁻¹², the q_dedup_minhash exhaustiveness argument),
-    * pure long arithmetic over the already-hashed `toks`, no extra text
+    * materialized base (the banding whose miss rate [[bucketSelfJoin]]
+    * states — ≈ 3·10⁻¹² at J = 0.9), pure long arithmetic over the already-hashed `toks`, no extra text
     * scan. The union can only ADD candidates; the exact verify decides
     * membership, so the fix moves the output toward the oracle and nowhere
     * else. The simhash channel stays for its hamming-radius semantics

@@ -407,14 +407,6 @@ final class CrawlEngine(
     // generation unpersist
     val genCaches = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // phase timing (env GRAFT_PHASE_TIMING=1): finds serial driver floors
-    val timing = sys.env.get("GRAFT_PHASE_TIMING").contains("1")
-    var tLast = System.nanoTime()
-    def lap(name: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      println(f"[gen $round] $name%-18s ${(now - tLast) / 1e9}%6.2fs")
-      tLast = now
-    }
 
     // ---- G4: search fan-out (both kinds, all pages) --------------------
     val batchDs = spark.createDataset(batch.zipWithIndex.map { case (q, i) => (q, i) })
@@ -438,7 +430,6 @@ final class CrawlEngine(
     // (the old pre-pass carried a groupBy(host) whose O(hosts) per-task
     // partial maps made it anti-scale at high parallelism).
     val nCandidates = candidates.count()
-    lap("candidates")
 
     // Hot hosts = top-k by CUMULATIVE scheduled fetches from the host_state
     // table (k rows via server-side orderBy/limit). Using the prior
@@ -452,7 +443,6 @@ final class CrawlEngine(
           .select($"host").as[String].collect().toSet
       case _ => Set.empty
     }
-    lap("hot-hosts")
 
     // ---- D1: intra-batch first-seen-wins on deterministic ArrivalKey ----
     val arrival = Seq($"kind", $"query_rank", $"page", $"result_rank")
@@ -521,7 +511,6 @@ final class CrawlEngine(
     // co-partitions on host instead of broadcasting
     val cuckooTierBytes = builtEstBytes +
       cuckooT.currentSnapshot.flatMap(_.counters.get("bytes")).getOrElse(0L)
-    lap("cuckoo-seed")
 
     // Probe = joins to the tier tables + codegen'd native expressions (no
     // Scala UDF): candidates pick up their bucket's Bloom blob (explicitly
@@ -605,7 +594,6 @@ final class CrawlEngine(
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
     val nExpanded = if (expandTopK <= 0) 0L else picks.count()
-    lap("picks")
 
     // ---- T4: robots gate + per-host politeness schedule (both phases) ---
     // per-host order: phase 0 (ArrivalKey order) then phase 1 (score order);
@@ -704,45 +692,33 @@ final class CrawlEngine(
     // N→4N scaling; the defensive materialize-then-commit shape is the one
     // that scales.)
     newLinks.count()
-    lap("compute-dedup")
     fetched.count()
-    lap("compute-fetch")
 
     // ---- commits (processed_queries LAST — K3 barrier) -----------------
-    // Independent table commits run as CONCURRENT Spark jobs (separate
-    // dirs, per-table atomic pointer flips; crash recovery handles any
-    // committed subset). Per-generation counters come free from the
-    // manifests' per-commit row deltas — no standalone count() jobs.
+    // Independent table commits run as CONCURRENT Spark jobs in one
+    // [[graft.util.CommitWindow]] (separate dirs, per-table atomic pointer
+    // flips; crash recovery handles any committed subset). Per-generation
+    // counters come free from the manifests' per-commit row deltas — no
+    // standalone count() jobs.
     val seenDelta = newLinks.select($"href", $"host")
       .unionByName(picks.select($"href", $"host"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def timedF[T](name: String)(body: => T): Future[T] = Future {
-      // one scheduler pool per commit: under spark.scheduler.mode=FAIR the
-      // concurrent write jobs share task slots instead of FIFO-queueing
-      // behind whichever job grabbed all slots first (no-op under FIFO)
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"commit-$name")
-      val t = System.nanoTime()
-      val r = body
-      if (timing) println(f"[gen $round]   commit:$name%-12s ${(System.nanoTime() - t) / 1e9}%6.2fs")
-      r
-    }
+    val window = new graft.util.CommitWindow(spark.sparkContext)
     // seen is stored BUCKETED by href (one file per bucket per commit):
     // [[exactNotInSeen]] reads it back bucket-aligned so the anti-join's
     // seen side never exchanges. The bucket count is pinned by the first
     // bucketed commit (manifest registry) so later generations stay
     // join-compatible even if the session's shuffle partitioning changes.
-    val seenF = timedF("seen")(seenT.appendBucketed(seenDelta, round, seenBuckets, "href"))
-    val linksF = timedF("links")(linksT.append(kept.toDF(), round))
-    val pdfF = timedF("pdf")(pdfT.append(
+    val seenMeta = window.add("commit-seen")(
+      seenT.appendBucketed(seenDelta, round, seenBuckets, "href"))
+    val linksMeta = window.add("commit-links")(linksT.append(kept.toDF(), round))
+    val pdfMeta = window.add("commit-pdf")(pdfT.append(
       pdfLinks.select($"href".as("url"), lit(round).as("generation")).coalesce(4), round))
     // distributed Bloom-tier delta merge rides the same concurrency window:
     // per-bucket delta filters aggregated executor-side, OR-merged into the
     // stored tier by a full-outer join — the driver only flips the pointer
     val (bloomCap, bloomNb) = (bloomCapacity, bloomBlocks)
-    val bloomF = timedF("bloom") {
+    window.add("commit-bloom") {
       val deltaBloom = seenDelta
         .select(bucketCol($"href").as("bucket"), $"href")
         // pre-shuffle by bucket (see ensureBloomTier): bounds the partial
@@ -770,7 +746,7 @@ final class CrawlEngine(
     // stay a SUPERSET of that host's seen URLs or its exact-negative claim
     // breaks — insert this generation's delta EXECUTOR-SIDE via cogroup;
     // saturated filters are dropped (rebuilt 4× larger when next hot)
-    val cuckooF = if (!cuckooActive) Future.successful(()) else timedF("cuckoo") {
+    if (cuckooActive) window.add("commit-cuckoo") {
       val cur = cuckooDf.as[(String, Array[Byte], Boolean)]
       val deltaByHost = seenDelta.select($"host", $"href").as[(String, String)]
       val updated = cur.groupByKey(_._1).cogroup(deltaByHost.groupByKey(_._1)) {
@@ -790,13 +766,13 @@ final class CrawlEngine(
       cuckooT.replace(updated, round, Map("bytes" -> tierBytes))
       updated.unpersist()
     }
-    val eventsF = timedF("events")(eventsT.append(
+    val eventsMeta = window.add("commit-events")(eventsT.append(
       sched.select($"href".as("url"), $"host", $"salt", $"scheduled_ms",
         $"min_delay_ms", lit(round).as("round"), $"phase"), round))
     // host_state: untouched hosts keep state; scheduled hosts advance and
     // accumulate their lifetime fetch count (the hot-host top-k statistic) —
     // depends only on sched (cached), so it rides the first wave
-    val hostF = timedF("hoststate") {
+    window.add("commit-hoststate") {
       val updatedState = sched.groupBy($"host")
         .agg((max($"scheduled_ms") + first($"min_delay_ms")).as("next_free"),
           count(lit(1)).as("n_new"))
@@ -808,22 +784,15 @@ final class CrawlEngine(
           (coalesce($"old_n", lit(0L)) + coalesce($"n_new", lit(0L))).as("n_scheduled"))
       hostStateT.replace(newState, round)
     }
-    val docsF = timedF("docs")(docsT.append(docsDf.toDF(), round))
-    val imagesF = timedF("images")(imagesT.append(imagesDf.toDF(), round))
-    val pmF = timedF("partmetrics")(partitionMetricsT.append(partMetrics, round))
-    val (seenMeta, linksMeta, eventsMeta, docsMeta, pdfMeta) = (
-      Await.result(seenF, Duration.Inf), Await.result(linksF, Duration.Inf),
-      Await.result(eventsF, Duration.Inf), Await.result(docsF, Duration.Inf),
-      Await.result(pdfF, Duration.Inf))
-    Await.result(imagesF, Duration.Inf); Await.result(pmF, Duration.Inf)
-    Await.result(hostF, Duration.Inf)
-    Await.result(bloomF, Duration.Inf); Await.result(cuckooF, Duration.Inf)
-    lap("commits")
+    val docsMeta = window.add("commit-docs")(docsT.append(docsDf.toDF(), round))
+    window.add("commit-images")(imagesT.append(imagesDf.toDF(), round))
+    window.add("commit-partmetrics")(partitionMetricsT.append(partMetrics, round))
+    window.run()
 
-    val nNew = seenT.deltaRows(seenMeta) - nExpanded
-    val nKept = linksT.deltaRows(linksMeta)
-    val nScheduled = eventsT.deltaRows(eventsMeta)
-    val nDocs = docsT.deltaRows(docsMeta)
+    val nNew = seenT.deltaRows(seenMeta()) - nExpanded
+    val nKept = linksT.deltaRows(linksMeta())
+    val nScheduled = eventsT.deltaRows(eventsMeta())
+    val nDocs = docsT.deltaRows(docsMeta())
     val counters = Map(
       "candidates" -> nCandidates,
       "skipped" -> (nCandidates - nNew),
@@ -831,7 +800,7 @@ final class CrawlEngine(
       "added" -> nKept,
       "expanded" -> nExpanded,
       "scheduled" -> nScheduled,
-      "robots_blocked" -> (nKept - pdfT.deltaRows(pdfMeta) + nExpanded - nScheduled),
+      "robots_blocked" -> (nKept - pdfT.deltaRows(pdfMeta()) + nExpanded - nScheduled),
       "docs" -> nDocs)
 
     // ---- frontier maintenance: DELTA append (discoveries only) ----------
@@ -854,11 +823,9 @@ final class CrawlEngine(
         .select($"url", $"host", $"score", $"discovered_gen")
       frontierT.append(discoveries, round)
     }
-    lap("frontier")
     metricsT.append(counters.toSeq.toDF("key", "value").withColumn("generation", lit(round)), round)
     processedT.append(batch.zipWithIndex.toDF("query", "query_rank")
       .withColumn("generation", lit(round)), round) // commit point
-    lap("metrics+barrier")
 
     (Seq[Dataset[_]](newLinks, kept, picks, sched, fetched, seenDelta, cuckooDf)
       ++ genCaches).foreach(_.unpersist())

@@ -130,12 +130,9 @@ object DedupStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
         commitBatch(spark, corpusTable, pairsTable, indexTable, batch, batchId,
           threshold, indexBuckets, autoCompactDirs, redirectsTable, quality,
           redirectSkipMinRows)
-        if (sys.env.get("GRAFT_STREAM_TIMING").contains("1"))
-          System.err.println(f"[stream-timing] batch=$batchId TOTAL        ${(System.nanoTime() - t0) / 1e9}%6.2fs")
       }
       .start()
   }
@@ -203,16 +200,6 @@ object DedupStream {
                                      quality: Column => Column = TextAnalysis.qualityScore,
                                      redirectSkipMinRows: Long = DefaultRedirectSkipMinRows): Unit = {
     import spark.implicits._
-    // GRAFT_STREAM_TIMING=1: per-stage walls to stderr (latency triage aid,
-    // same pattern as GRAFT_PHASE_TIMING on the crawl path)
-    val timing = sys.env.get("GRAFT_STREAM_TIMING").contains("1")
-    def timed[T](name: String)(body: => T): T =
-      if (!timing) body else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"[stream-timing] batch=$batchId $name%-12s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-        r
-      }
     val gen = batchId.toInt + 1
     val delta = batch.select(col("doc_id"), col("text"))
     val needPairs = !pairsTable.currentSnapshot.exists(_.generation >= gen)
@@ -231,27 +218,26 @@ object DedupStream {
       // The TABLE form prunes the index read by FILE (bucket ids in the
       // file names) — per-batch read cost tracks the delta's occupied
       // buckets, not the index size, with zero plan-side literal cost.
-      val (rawPairs, bandRows) = timed("candGen")(TextDedup
-        .minhashNearDupsIndexedWithBandRows(corpus, indexTable, delta, threshold,
-          "doc_id", "text", ShingleSize, NumHashes, Bands, MaxBucket,
-          false, 1 << 15, 1024))
+      val (rawPairs, bandRows) = TextDedup.minhashNearDupsIndexed(corpus, indexTable,
+        delta, threshold, "doc_id", "text", ShingleSize, NumHashes, Bands, MaxBucket,
+        false, 1 << 15, 1024)
       deltaBandRows = Some(bandRows)
       val raw = rawPairs.select(col("a"), col("b"))
       // redirect maintenance consumes the pair set twice (endpoints, edges)
       // on top of the append — materialize once; pairs are tiny (dup rate)
-      val pairs = timed("pairs")(if (needRedirects) raw.localCheckpoint(true) else raw)
-      if (needPairs) timed("pairsAppend")(pairsTable.append(pairs, generation = gen))
-      if (needRedirects && !timed("pairsEmpty?")(pairs.isEmpty)) redirectsTable.foreach { rt =>
+      val pairs = if (needRedirects) raw.localCheckpoint(true) else raw
+      if (needPairs) pairsTable.append(pairs, generation = gen)
+      if (needRedirects && !pairs.isEmpty) redirectsTable.foreach { rt =>
         // bucketed by doc_id, NOT a plain append: compactTiered only folds
         // uniformly bucketed chains, so plain redirect commits would grow
         // one dir per pairful batch FOREVER (the in-run fold below would
         // silently no-op) and the affected-docs semi-joins could never
         // read storage-aligned
-        timed("redirects")(rt.appendBucketed(
+        rt.appendBucketed(
           updatedRedirects(spark, rt, corpus.unionByName(delta), pairs, quality,
             redirectSkipMinRows)
             .withColumn("gen", lit(gen)),
-          generation = gen, buckets = indexBuckets, bucketCol = "doc_id"))
+          generation = gen, buckets = indexBuckets, bucketCol = "doc_id")
       }
     }
     // index and corpus appends are INDEPENDENT once pairs+redirects have
@@ -259,37 +245,25 @@ object DedupStream {
     // point, and a replay that finds any subset of {index, corpus}
     // committed re-runs exactly the missing appends — the per-table
     // generation guards below are evaluated BEFORE the concurrent window
-    // opens, same as the sequential form). Running them as concurrent
-    // Spark jobs (the crawl engine's commit-window pattern; FAIR pools
-    // share task slots) removes one serial append from the per-batch
-    // floor. The pairs→redirects→{index ∥ corpus} ORDER guarantee the
-    // replay analysis needs is preserved: both futures start strictly
-    // after the redirects append returns.
+    // opens, same as the sequential form). Running them in one
+    // [[graft.util.CommitWindow]] (concurrent Spark jobs, FAIR pools share
+    // task slots) removes one serial append from the per-batch floor. The
+    // pairs→redirects→{index ∥ corpus} ORDER guarantee the replay analysis
+    // needs is preserved: both bodies start strictly after the redirects
+    // append returns, and the window returns only once both have finished.
     val needIndex = !indexTable.currentSnapshot.exists(_.generation >= gen)
     val needCorpus = !corpusTable.currentSnapshot.exists(_.generation >= gen)
-    if (needIndex || needCorpus) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def pooled[T](pool: String)(body: => T): Future[T] = Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-        body
-      }
-      val idxF = if (!needIndex) Future.successful(()) else pooled("commit-index") {
-        // reuse the candidate generator's materialized band rows; recompute
-        // only on the replay path where pairs+redirects already committed
-        // (bit-identical either way — the pipeline is deterministic)
-        timed("indexAppend")(indexTable.appendBucketed(
-          deltaBandRows.getOrElse(
-            TextDedup.bandIndexOf(delta, ShingleSize, NumHashes, Bands)),
-          generation = gen, buckets = indexBuckets, bucketCol = "bkey"))
-      }
-      val corpF = if (!needCorpus) Future.successful(()) else pooled("commit-corpus") {
-        timed("corpusAppend")(corpusTable.append(delta, generation = gen))
-      }
-      Await.result(idxF, Duration.Inf)
-      Await.result(corpF, Duration.Inf): Unit
+    val window = new graft.util.CommitWindow(spark.sparkContext)
+    if (needIndex) window.add("commit-index") {
+      // reuse the candidate generator's materialized band rows; recompute
+      // only on the replay path where pairs+redirects already committed
+      // (bit-identical either way — the pipeline is deterministic)
+      indexTable.appendBucketed(
+        deltaBandRows.getOrElse(TextDedup.bandIndexOf(delta, ShingleSize, NumHashes, Bands)),
+        generation = gen, buckets = indexBuckets, bucketCol = "bkey")
     }
+    if (needCorpus) window.add("commit-corpus")(corpusTable.append(delta, generation = gen))
+    window.run()
     if (autoCompactDirs > 0) {
       if (indexTable.commitDirCount >= autoCompactDirs)
         indexTable.compactTiered(spark, math.max(1, autoCompactDirs / 2))

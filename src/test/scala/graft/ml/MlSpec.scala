@@ -223,23 +223,12 @@ class MlSpec extends AnyFunSuite {
     assert(batch.contains((1L, 500L)), "fixture sanity: the corpus-internal dup pairs in batch mode")
     assert(!got.contains((1L, 500L)), "corpus-internal pairs must not surface incrementally")
 
-    // indexed form: the persisted band index replaces the live corpus
-    // banding scan — identical output on the pruned (bkey IN) path, the
-    // unpruned path (pruneMaxKeys = 0), and vs the recomputing form
-    val index = TextDedup.bandIndexOf(corpus).localCheckpoint()
-    val gotIdx = TextDedup.minhashNearDupsIndexed(corpus, index, delta, 0.8)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotIdx == want, s"indexed != restricted batch; extra=${gotIdx -- want} missing=${want -- gotIdx}")
-    val gotIdxNoPrune = TextDedup
-      .minhashNearDupsIndexed(corpus, index, delta, 0.8, pruneMaxKeys = 0)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotIdxNoPrune == want, "bkey pruning must not change the pair set")
-
-    // TABLE form: the index persisted as a bkey-bucketed snapshot table and
-    // read with FILE-level bucket skip (64 buckets so the delta occupies a
-    // proper subset and whole files actually drop). Same pair set with the
-    // literal IN on (small keys) and fully off (inListCap = 0 — the shape
-    // large deltas take at scale, file skip + semi-join alone).
+    // indexed form: the band index persisted as a bkey-bucketed snapshot
+    // table replaces the live corpus banding scan (64 buckets so the delta
+    // occupies a proper subset and whole files actually drop). Same pair
+    // set on every read path: file skip + literal IN (small keys), file
+    // skip alone (inListCap = 0 — the shape large deltas take at scale),
+    // and the full unpruned read (pruneMaxKeys = 0 — no key collection).
     val store = graft.snapshot.SnapshotStore(
       java.nio.file.Files.createTempDirectory("graft-mlidx").toString)
     val idxT = store.table("band_index")
@@ -247,20 +236,19 @@ class MlSpec extends AnyFunSuite {
       generation = 1, buckets = 64, bucketCol = "bkey")
     idxT.appendBucketed(TextDedup.bandIndexOf(corpus.filter($"doc_id" >= 30)),
       generation = 2, buckets = 64, bucketCol = "bkey")
-    val gotTbl = TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotTbl == want, s"table-form != restricted batch; extra=${gotTbl -- want} missing=${want -- gotTbl}")
-    val gotTblNoIn = TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8,
-      "doc_id", "text", 3, 32, 16, 1000, true, 1 << 15, 0)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotTblNoIn == want, "file-level bucket skip alone must not change the pair set")
+    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select($"a", $"b").as[(Long, Long)].collect().toSet
+    val (pairsTbl, bandRows) = TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8)
+    val gotTbl = pairSet(pairsTbl)
+    assert(gotTbl == want, s"indexed != restricted batch; extra=${gotTbl -- want} missing=${want -- gotTbl}")
+    assert(pairSet(TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8, inListCap = 0)._1) == want,
+      "file-level bucket skip alone must not change the pair set")
+    assert(pairSet(TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8, pruneMaxKeys = 0)._1) == want,
+      "the full unpruned index read must give the same pair set")
 
-    // WithBandRows form: the second element must be EXACTLY bandIndexOf(delta)
-    // — DedupStream appends it to the persisted index in place of a second
+    // the returned band rows must be EXACTLY bandIndexOf(delta) —
+    // DedupStream appends them to the persisted index in place of a second
     // shingle+minhash pass, so any drift would silently lose cross-batch pairs
-    val (pairsWBR, bandRows) =
-      TextDedup.minhashNearDupsIndexedWithBandRows(corpus, idxT, delta, 0.8)
-    assert(pairsWBR.select($"a", $"b").as[(Long, Long)].collect().toSet == want)
     val wantRows = TextDedup.bandIndexOf(delta)
       .as[(Long, Int, Array[Long], Long)].collect()
       .map { case (id, b, sig, k) => (id, b, sig.toSeq, k) }.toSet

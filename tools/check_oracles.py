@@ -42,14 +42,16 @@ for name, sql in sorted(oracles.items()):
     except Exception as e:
         print(f"[FAIL] {name}: {type(e).__name__}: {e}"); fail += 1
 
-# rows-only queries (no oracle): report row counts
+# rows-only queries (no oracle): an empty result fails the gate
+empty = 0
 for qdir in sorted(glob.glob(f"{out_dir}/q*")):
     name = os.path.basename(qdir)
     if name in oracles or not os.path.isdir(qdir):
         continue
     n = pq.read_table(qdir).num_rows
     status = "ok " if n > 0 else "EMPTY"
+    empty += int(n == 0)
     print(f"[rows] {name}: {n} rows ({status})")
 
-print(f"\n{ok} ok, {fail} failed of {len(oracles)} oracles")
-sys.exit(1 if fail else 0)
+print(f"\n{ok} ok, {fail} failed of {len(oracles)} oracles; {empty} rows-only queries EMPTY")
+sys.exit(1 if fail or empty else 0)

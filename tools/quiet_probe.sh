@@ -30,7 +30,7 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 MEM=${SPARK_DRIVER_MEM:-64g}
 env BENCH_SKIP_QUERIES=1 BENCH_ATTEMPTS=1 BENCH_TARGET_EFF=0 \
-  GRAFT_PHASE_TIMING=1 BENCH_QUERIES="$Q" "$@" \
+  BENCH_QUERIES="$Q" "$@" \
   java $ADDOPENS -Xmx$MEM -Xms$MEM \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
